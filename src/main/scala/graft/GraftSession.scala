@@ -2,13 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local session recipe shared by every driver-contract main
-  * (Verify / Bench / ScaleCurve / TimeOne), so a config change — an ANSI
-  * pin, the nanos normalization — can never skew one tool against the
-  * others by being applied to two of three builders.
+/** The one local session recipe: every main (Verify, Bench, ScaleCurve,
+  * GenScale, PlanDump, CcBench, TimeOne), the perfbench harness and the
+  * specs (`SparkSpec`) build their session here, so a config change — an
+  * ANSI pin, the nanos normalization — can never skew one caller against
+  * the others. It is also the only place graft's Catalyst extensions are
+  * installed, so a query's plan never depends on which queries ran
+  * before it in the JVM.
   */
 object GraftSession {
-  def build(cpus: String, adaptive: Boolean = true): SparkSession = {
+  def build(cpus: String): SparkSession = {
     // streaming temp checkpoints → tmpfs scratch (see Staging): the
     // fsync-heavy offset/commit/state metadata of every bounded
     // AvailableNow run stops touching the disk. spark.local.dir is
@@ -28,10 +31,28 @@ object GraftSession {
       // pinned: the simhash lane-packing overflow guard (Dedup.scala)
       // relies on ANSI sum-overflow semantics as its backstop
       .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.adaptive.enabled", adaptive.toString)
+      .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    installExtensions(spark)
     spark
+  }
+
+  /** Registers graft's SQL functions, its optimizer rules and the
+    * TopKPerKey planner strategy. The rules go in through `experimental`
+    * rather than `SparkSessionExtensions`, which would move them into the
+    * Operator Optimization batch and would be skipped when `getOrCreate`
+    * returns an existing session. Idempotent, so a rebuild on the same
+    * session adds nothing twice.
+    */
+  private def installExtensions(spark: SparkSession): Unit = {
+    graft.functions.GraftExtensions.descriptors.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
+    val exp = spark.experimental
+    exp.extraOptimizations = (exp.extraOptimizations ++ Seq(
+      graft.functions.SimplifyJsToNumber, graft.plans.RewriteTopKWindow)).distinct
+    exp.extraStrategies = (exp.extraStrategies :+ graft.plans.TopKPerKeyStrategy).distinct
   }
 
   /** Two-JSON-line artifact emit: stdout (summary line FIRST, so no

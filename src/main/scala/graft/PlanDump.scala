@@ -2,8 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Dev scratch main: print the formatted executed plan of named queries
-  * at an SF dir (default sf0.1) — the `.explain` feedback loop SCALE.md's
-  * plan audits use, runnable without a spec.
+  * at an SF dir (default sf0.1) on SPARK_GRAFT_CPUS cores (default 8) —
+  * the `.explain` feedback loop SCALE.md's plan audits use, runnable
+  * without a spec.
   *
   * r17: with PLAN_OUT_DIR set, each query's `.explain("formatted")`
   * output is ALSO written to `$PLAN_OUT_DIR/<name>_<PLAN_SUFFIX>.txt`
@@ -15,7 +16,7 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.get("PLAN_OUT_DIR")
     val suffix = sys.env.getOrElse("PLAN_SUFFIX", "plan")
-    val spark = GraftSession.build("8")
+    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     for (name <- args) {
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.count() // let AQE finalize so the printed plan is the real one

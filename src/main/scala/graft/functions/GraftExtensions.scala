@@ -1,232 +1,73 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-/** SparkSessionExtensions hook registering graft's native expressions so
-  * they are usable from SQL text as well as the Column API. Activate with
-  *   .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-  * or programmatically via `GraftExtensions.install(spark)` on a live
-  * session.
+/** graft's native SQL functions, usable from SQL text as well as the
+  * Column API. `GraftSession.build` registers every descriptor below on
+  * each session it returns, together with the `SimplifyJsToNumber` and
+  * `RewriteTopKWindow` rules and the `TopKPerKeyStrategy` planner; no
+  * query or spec installs anything itself.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.jsToNumberDescriptor)
-    ext.injectFunction(GraftExtensions.hex60Descriptor)
-    ext.injectFunction(GraftExtensions.hilbertDescriptor)
-    ext.injectFunction(GraftExtensions.kmvDescriptor)
-    ext.injectFunction(GraftExtensions.kllSketchDescriptor)
-    ext.injectFunction(GraftExtensions.kllMergeDescriptor)
-    ext.injectFunction(GraftExtensions.kllQuantileDescriptor)
-    ext.injectFunction(GraftExtensions.mgSketchDescriptor)
-    ext.injectFunction(GraftExtensions.mgMergeDescriptor)
-    ext.injectFunction(GraftExtensions.mgEstimateDescriptor)
-    ext.injectFunction(GraftExtensions.kmvSketchDescriptor)
-    ext.injectFunction(GraftExtensions.kmvMergeDescriptor)
-    ext.injectFunction(GraftExtensions.kmvEstimateDescriptor)
-    ext.injectFunction(GraftExtensions.lvecSumDescriptor)
-    ext.injectOptimizerRule(_ => SimplifyJsToNumber)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteTopKWindow)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
-  }
-}
-
 object GraftExtensions {
-  private[functions] val jsToNumberDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("js_to_number"),
-    new ExpressionInfo(classOf[JsToNumber].getName, "js_to_number"),
+  private[graft] type Descriptor =
+    (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  private def fn(name: String, cls: Class[_], arity: Int, usage: String)(
+      build: Seq[Expression] => Expression): Descriptor = (
+    FunctionIdentifier(name),
+    new ExpressionInfo(cls.getName, name),
     (children: Seq[Expression]) => {
-      require(children.size == 1, "js_to_number takes exactly 1 argument")
-      JsToNumber(children.head)
+      require(children.size == arity, s"$name takes $usage")
+      build(children)
     }
   )
 
-  private[functions] val hex60Descriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_hex60"),
-    new ExpressionInfo(classOf[Hex60].getName, "graft_hex60"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_hex60 takes exactly 1 argument")
-      Hex60(children.head)
-    }
-  )
-
-  private[functions] val hilbertDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_hilbert"),
-    new ExpressionInfo(classOf[HilbertIndex].getName, "graft_hilbert"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3, "graft_hilbert takes (x BIGINT, y BIGINT, bits INT)")
-      HilbertIndex(children(0), children(1), children(2))
-    }
-  )
-
-  private[functions] val kmvDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_kmv_distinct"),
-    new ExpressionInfo(classOf[KmvDistinct].getName, "graft_kmv_distinct"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_kmv_distinct takes (hash BIGINT, k INT literal)")
-      val k = children(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_kmv_distinct k must be an integer literal, got $other")
-      }
-      KmvDistinct(children.head, k)
-    }
-  )
-
-  private[functions] val kllSketchDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_kll_sketch"),
-    new ExpressionInfo(classOf[KllSketchAgg].getName, "graft_kll_sketch"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_kll_sketch takes (v BIGINT, k INT literal)")
-      val k = children(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_kll_sketch k must be an integer literal, got $other")
-      }
-      KllSketchAgg(children.head, k)
-    }
-  )
-
-  private[functions] val kllMergeDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_kll_merge"),
-    new ExpressionInfo(classOf[KllMergeAgg].getName, "graft_kll_merge"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_kll_merge takes (sketch BINARY)")
-      KllMergeAgg(children.head)
-    }
-  )
-
-  private[functions] val kllQuantileDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_kll_quantile"),
-    new ExpressionInfo(classOf[KllQuantile].getName, "graft_kll_quantile"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_kll_quantile takes (sketch BINARY, q_ppm BIGINT)")
-      KllQuantile(children(0), children(1))
-    }
-  )
-
-  private[functions] val mgSketchDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_mg_sketch"),
-    new ExpressionInfo(classOf[MgSketchAgg].getName, "graft_mg_sketch"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_mg_sketch takes (item STRING, k INT literal)")
-      val k = children(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_mg_sketch k must be an integer literal, got $other")
-      }
-      MgSketchAgg(children.head, k)
-    }
-  )
-
-  private[functions] val mgMergeDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_mg_merge"),
-    new ExpressionInfo(classOf[MgMergeAgg].getName, "graft_mg_merge"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_mg_merge takes (sk BINARY)")
-      MgMergeAgg(children.head)
-    }
-  )
-
-  private[functions] val mgEstimateDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_mg_estimate"),
-    new ExpressionInfo(classOf[MgEstimate].getName, "graft_mg_estimate"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_mg_estimate takes (sk BINARY, item STRING)")
-      MgEstimate(children(0), children(1))
-    }
-  )
-
-  private[functions] val kmvSketchDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_kmv_sketch"),
-    new ExpressionInfo(classOf[KmvSketchAgg].getName, "graft_kmv_sketch"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_kmv_sketch takes (hash BIGINT, k INT literal)")
-      val k = children(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_kmv_sketch k must be an integer literal, got $other")
-      }
-      KmvSketchAgg(children.head, k)
-    }
-  )
-
-  private[functions] val kmvMergeDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_kmv_merge"),
-    new ExpressionInfo(classOf[KmvMergeAgg].getName, "graft_kmv_merge"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_kmv_merge takes (sk BINARY)")
-      KmvMergeAgg(children.head)
-    }
-  )
-
-  private[functions] val kmvEstimateDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_kmv_estimate"),
-    new ExpressionInfo(classOf[KmvEstimate].getName, "graft_kmv_estimate"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_kmv_estimate takes (sk BINARY)")
-      KmvEstimate(children.head)
-    }
-  )
-
-  private[functions] val lvecSumDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_lvecsum"),
-    new ExpressionInfo(classOf[LongVecSumAgg].getName, "graft_lvecsum"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_lvecsum takes (v ARRAY<BIGINT>)")
-      LongVecSumAgg(children.head)
-    }
-  )
-
-  /** Register on an already-built session (the extensions config only
-    * applies at session construction).
-    */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Seq(jsToNumberDescriptor, hex60Descriptor, hilbertDescriptor, kmvDescriptor,
-      kllSketchDescriptor, kllMergeDescriptor, kllQuantileDescriptor,
-      mgSketchDescriptor, mgMergeDescriptor, mgEstimateDescriptor,
-      kmvSketchDescriptor, kmvMergeDescriptor, kmvEstimateDescriptor,
-      lvecSumDescriptor
-    ).foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
-    if (!spark.experimental.extraOptimizations.contains(SimplifyJsToNumber))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ SimplifyJsToNumber
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RewriteTopKWindow))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RewriteTopKWindow
-    graft.plans.TopKPerKey.install(spark) // rewritten plans need the strategy
+  /** The sketch size `k` must be a foldable integer literal. */
+  private def kLiteral(name: String, e: Expression): Int = e match {
+    case Literal(v: Int, _) => v
+    case Literal(v: Long, _) => v.toInt
+    case other => throw new IllegalArgumentException(
+      s"$name k must be an integer literal, got $other")
   }
 
-  /** Column-API entry point (session must have the function installed). */
+  private[graft] val descriptors: Seq[Descriptor] = Seq(
+    fn("js_to_number", classOf[JsToNumber], 1, "exactly 1 argument")(c =>
+      JsToNumber(c.head)),
+    fn("graft_hex60", classOf[Hex60], 1, "exactly 1 argument")(c => Hex60(c.head)),
+    fn("graft_hilbert", classOf[HilbertIndex], 3, "(x BIGINT, y BIGINT, bits INT)")(c =>
+      HilbertIndex(c(0), c(1), c(2))),
+    fn("graft_kmv_distinct", classOf[KmvDistinct], 2, "(hash BIGINT, k INT literal)")(c =>
+      KmvDistinct(c.head, kLiteral("graft_kmv_distinct", c(1)))),
+    fn("graft_kll_sketch", classOf[KllSketchAgg], 2, "(v BIGINT, k INT literal)")(c =>
+      KllSketchAgg(c.head, kLiteral("graft_kll_sketch", c(1)))),
+    fn("graft_kll_merge", classOf[KllMergeAgg], 1, "(sketch BINARY)")(c =>
+      KllMergeAgg(c.head)),
+    fn("graft_kll_quantile", classOf[KllQuantile], 2, "(sketch BINARY, q_ppm BIGINT)")(c =>
+      KllQuantile(c(0), c(1))),
+    fn("graft_mg_sketch", classOf[MgSketchAgg], 2, "(item STRING, k INT literal)")(c =>
+      MgSketchAgg(c.head, kLiteral("graft_mg_sketch", c(1)))),
+    fn("graft_mg_merge", classOf[MgMergeAgg], 1, "(sk BINARY)")(c => MgMergeAgg(c.head)),
+    fn("graft_mg_estimate", classOf[MgEstimate], 2, "(sk BINARY, item STRING)")(c =>
+      MgEstimate(c(0), c(1))),
+    fn("graft_kmv_sketch", classOf[KmvSketchAgg], 2, "(hash BIGINT, k INT literal)")(c =>
+      KmvSketchAgg(c.head, kLiteral("graft_kmv_sketch", c(1)))),
+    fn("graft_kmv_merge", classOf[KmvMergeAgg], 1, "(sk BINARY)")(c => KmvMergeAgg(c.head)),
+    fn("graft_kmv_estimate", classOf[KmvEstimate], 1, "(sk BINARY)")(c =>
+      KmvEstimate(c.head)),
+    fn("graft_lvecsum", classOf[LongVecSumAgg], 1, "(v ARRAY<BIGINT>)")(c =>
+      LongVecSumAgg(c.head))
+  )
+
+  /** Column-API entry point for the native JS `Number()` coercion. */
   def js_to_number(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.call_function("js_to_number", c)
 
-  /** Column-API entry point for the native hex60 (install first). */
+  /** Column-API entry point for the native hex60. */
   def graft_hex60(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.call_function("graft_hex60", c)
 
-  /** Column-API entry point for the native Hilbert index (install first). */
+  /** Column-API entry point for the native Hilbert index. */
   def graft_hilbert(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column,
                     bits: Int): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.call_function("graft_hilbert", x, y,

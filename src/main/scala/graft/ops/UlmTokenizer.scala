@@ -347,11 +347,13 @@ object UlmTokenizer {
     * that embeds the whole upstream census subtree once PER JOIN — the
     * q_text_kl plan carried four such copies. Values are bit-identical;
     * the DuckDB oracle text (staged CASE-chain fixed point) is untouched.
+    * NULL values are skipped and duplicates collapse, so the table has
+    * one row per distinct non-NULL value (empty for an empty input).
     */
   def cbTableLocal(vals: DataFrame, what: String): DataFrame = {
     val spark = vals.sparkSession
     val rows = CorpusOps.collectBounded(vals, what)
-      .map(r => r.getLong(0))
+      .collect { case r if !r.isNullAt(0) => r.getLong(0) }.distinct
     require(rows.forall(_ >= 0L), s"$what: cb input values must be >= 0")
     // v = 0 replays the staged chain exactly: _q = 0, kk = length(bin(0))
     // − 1 = 0, _m0 = 0, every square stays 0 ⇒ cb = 64 div 128 = 0

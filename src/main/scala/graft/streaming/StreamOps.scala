@@ -102,21 +102,29 @@ object StreamOps {
     * serialized per path via ConcurrentHashMap.compute (atomic per key
     * — TrieMap.getOrElseUpdate could evaluate the by-name write twice
     * under concurrent first calls, racing two overwrite writes into the
-    * same dir). */
+    * same dir). A rewrite of an already-staged path logs one WARN line. */
   private val stagedOnce = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
   def stageOnce(path: String, fingerprint: String = "")(write: => Unit): String = {
     stagedOnce.compute(path, (_: String, prev: String) => {
-      if (prev == null || prev != fingerprint) write
+      if (prev != fingerprint) {
+        if (prev != null)
+          log.warn(s"stageOnce: restaging $path, its source fingerprint changed in this JVM")
+        write
+      }
       fingerprint
     })
     path
   }
 
+  /** Paths whose source fingerprint fell back to "" (logged once each). */
+  private val unfingerprinted = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
   /** Metadata-scale content fingerprint of a DataFrame's source files
     * (path, size, mtime per input file). Empty string when the inputs
-    * aren't stat-able local files — staging then degrades to plain
-    * once-per-JVM. */
-  private def sourceFingerprint(df: DataFrame): String =
+    * aren't stat-able local files — staging of `path` then degrades to
+    * plain once-per-JVM, which is logged once per path. */
+  private def sourceFingerprint(df: DataFrame, path: String): String =
     try {
       val h = java.security.MessageDigest.getInstance("MD5")
       df.inputFiles.sorted.foreach { f =>
@@ -125,7 +133,13 @@ object StreamOps {
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
       h.digest().map("%02x".format(_)).mkString
-    } catch { case _: Throwable => "" }
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        if (unfingerprinted.add(path))
+          log.warn(s"stageOnce: no source fingerprint for $path ($e); " +
+            "it is staged once per JVM and a changed source is not restaged")
+        ""
+    }
 
   /** `df.stageTo(path)` — the memoized spelling of
     * `df.write.mode("overwrite").parquet(path)` for staged stream
@@ -139,7 +153,7 @@ object StreamOps {
     // NULL-filled explicit-schema sharers silently). Schema drift now
     // triggers a rewrite instead.
     def stageTo(path: String): String =
-      stageOnce(path, sourceFingerprint(df) + "|" + df.schema.json)(
+      stageOnce(path, sourceFingerprint(df, path) + "|" + df.schema.json)(
         df.write.mode("overwrite").parquet(path))
   }
 

@@ -226,4 +226,14 @@ class UlmSpec extends SparkSpec {
       else assert(id >= 27)
     }
   }
+
+  test("cbTableLocal skips NULL values and collapses duplicates") {
+    // sum() over an empty relation is one NULL row
+    val emptySum = Seq.empty[Long].toDF("v").agg(sum(col("v")))
+    assert(UlmTokenizer.cbTableLocal(emptySum, "empty sum").collect().isEmpty)
+    val vals = Seq(Some(8L), None, Some(8L), Some(0L)).toDF("v")
+    val got = UlmTokenizer.cbTableLocal(vals, "dups").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).sorted.toSeq
+    assert(got == Seq(0L -> 0L, 8L -> UlmTokenizer.costCbLocal(8L, 1L)))
+  }
 }
