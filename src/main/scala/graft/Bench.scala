@@ -54,12 +54,14 @@ object Bench {
     // families ran grew with it — the r13 graph-family drift
     // (q_graph_kcore 3.80→6.37 s with NO code change) is exactly this
     // shape. Nothing outside a family legitimately holds an RDD persist
-    // across the boundary: cross-query model memos are driver-side
-    // collected Seqs, and CacheScope datasets live in the catalog cache.
+    // across the boundary: CacheScope datasets live in the catalog cache,
+    // and StorageMemos.invalidateAll drops every memo entry that holds
+    // storage while keeping the frame-less ones (driver-side models,
+    // staged stream paths).
     def clearStorage(spark: org.apache.spark.sql.SparkSession): Unit = {
       // memo invalidation FIRST: a memo holding a localCheckpoint'd
       // DataFrame across the clear would fail its next use (blocks gone,
-      // lineage truncated) — see CacheScope.StorageMemos
+      // lineage truncated)
       graft.ops.StorageMemos.invalidateAll()
       spark.catalog.clearCache()
       // blocking: the release must not overlap the next family's first

@@ -26,16 +26,16 @@ object Verify {
     // driver's gate (local three-way agreement is byte-exact — see
     // AnnDriverDiagSpec / tools/ann_margin_audit.py), so dump the
     // PRE-AGGREGATION relation (one row per vector: cell, code sum, n2,
-    // distortion) as `<name>__debug` sidecars. A census mismatch then
+    // distortion) as `_debug/<name>` sidecars. A census mismatch then
     // localizes to specific vectors instead of opaque per-cell sums.
-    // Names carry no oracle entry, so the gate's per-oracle compare
-    // ignores them; they exist purely as driver-captured evidence.
+    // They sit under `_debug/`, so the output dir's top level holds only
+    // registered query names; they exist purely as captured evidence.
     if (Seq("q_ann_build", "q_ann_delta", "q_ann_stats").exists(nameFilter.matches)) {
       import org.apache.spark.sql.functions._
       def sidecar(name: String)(df: => org.apache.spark.sql.DataFrame): Unit =
         if (nameFilter.matches(name))
           try df.orderBy(col("vec_id")).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/${name}__debug")
+            .parquet(s"$outDir/_debug/$name")
           catch { case e: Throwable =>
             System.err.println(s"[verify] $name debug sidecar failed: ${e.getMessage}")
           }

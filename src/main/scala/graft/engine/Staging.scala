@@ -42,8 +42,8 @@ object Staging {
     * gate's q_ann_* signature: right rows, wrong sums). A random per-JVM
     * segment makes every query a pure function of (session, dataset) —
     * no other process can even name this JVM's scratch. Within-JVM reuse
-    * (the stageOnce fingerprint memos) is untouched: those memos were
-    * always per-JVM, so nothing was ever legitimately shared across
+    * (staged paths in graft.ops.StorageMemos, ANN index markers) is
+    * per-JVM too, so nothing was ever legitimately shared across
     * processes. A shutdown hook removes the whole tree so tmpfs never
     * accumulates across runs.
     */

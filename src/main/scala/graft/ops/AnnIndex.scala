@@ -73,13 +73,20 @@ object AnnIndex {
     // directory layout (and therefore probe pruning) is identical.
     assignWithSeeds(corpus, idCol, vecCol, seeds, pqM, pqK)
       .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/postings")
-    // marker LAST: its presence (with a fresh token) certifies a complete
-    // build — readers memo the token and revalidate before serving, so a
-    // deleted, partially-written, or concurrently-rebuilt artifact is
-    // DETECTED and rebuilt rather than silently aggregated (r16 verdict #1)
+    // marker LAST: its presence (with this JVM's tag) certifies a complete
+    // build — readers check it before serving, so a deleted, partially-
+    // written, or foreign-rebuilt artifact is DETECTED and rebuilt rather
+    // than silently aggregated (r16 verdict #1)
     java.nio.file.Files.write(markerPath(dir),
-      java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
+      s"$jvmTag/${java.util.UUID.randomUUID()}".getBytes("UTF-8"))
   }
+
+  /** Prefix of every marker this JVM's [[build]] writes: a marker
+    * without it (clobbered, or written by another process) is foreign. */
+  private val jvmTag = java.util.UUID.randomUUID().toString
+
+  /** True iff `dir` holds a complete build made by this JVM. */
+  def builtHere(dir: String): Boolean = readMarker(dir).exists(_.startsWith(s"$jvmTag/"))
 
   /** Completion-marker path for a persisted index dir. The marker is the
     * hermeticity contract: written last by [[build]] with a fresh token,

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
+import scala.util.control.NonFatal
 
 /** Cache-lifecycle scope for op-internal persists.
   *
@@ -39,18 +40,21 @@ import org.apache.spark.storage.StorageLevel
   * plan is still valid but recomputes from source.
   */
 object CacheScope {
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   final class Scope private[CacheScope] () {
     private val acquired = scala.collection.mutable.ArrayBuffer[DataFrame]()
     private[CacheScope] def register(df: DataFrame): Unit = acquired += df
 
     /** Unpersist everything acquired in this scope, newest first (a
-      * later persist may read through an earlier one). Idempotent;
-      * never throws — release runs on error paths.
+      * later persist may read through an earlier one). Idempotent; a
+      * non-fatal failure is logged and skipped — release runs on error
+      * paths.
       */
     def release(): Unit = {
       acquired.reverseIterator.foreach { df =>
-        try df.unpersist() catch { case _: Throwable => () }
+        try df.unpersist()
+        catch { case NonFatal(e) => log.warn(s"CacheScope release: dropping $e") }
       }
       acquired.clear()
     }
@@ -92,26 +96,5 @@ object CacheScope {
       active.set(active.get.tail)
       s.release()
     }
-  }
-}
-
-/** Registry of STORAGE-BACKED MEMOS — op/query-level caches whose values
-  * hold localCheckpoint'd or persisted DataFrames across calls (the ER
-  * shared-candidates memo, the suffix-array memo). A harness that clears
-  * executor storage wholesale (Bench/ScaleCurve at family boundaries)
-  * must invalidate these FIRST: unpersisting a localCheckpoint RDD
-  * destroys its only copy (lineage is truncated), so a memo handing out
-  * the old DataFrame afterwards fails with
-  * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND — observed when the r14 sweep's
-  * flag adjudication re-ran a q_er query after a cross-family clear.
-  * Each owner registers a hook that drops (and releases) its entries;
-  * the next access rebuilds. Hooks must never throw.
-  */
-object StorageMemos {
-  private val hooks = new java.util.concurrent.CopyOnWriteArrayList[() => Unit]()
-  def register(hook: () => Unit): Unit = hooks.add(hook)
-  def invalidateAll(): Unit = {
-    val it = hooks.iterator()
-    while (it.hasNext) { val h = it.next(); try h() catch { case _: Throwable => () } }
   }
 }

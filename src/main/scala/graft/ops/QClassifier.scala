@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import scala.collection.concurrent.TrieMap
 
 /** Quality-classifier TRAINING as a relational operator — the
   * fastText-style linear gate DCLM/FineWeb-class pipelines run as their
@@ -144,16 +143,12 @@ object QClassifier {
     }
   }
 
-  /** Per-JVM trained-model memo (the UlmTokenizer.trainedModel
-    * convention): (per-iteration weight trajectory, n_train), keyed by
-    * source dir — neither the scoring query nor the cartography census
-    * re-pays the T training passes. */
-  private val modelMemo = TrieMap.empty[String, (Seq[Map[Long, Long]], Long)]
-
-  /** Train on the confident seed labels of `docs` (memoized per dir):
-    * the weight vector after every iteration, plus n_train. */
+  /** Train on the confident seed labels of `docs`: the weight vector
+    * after every iteration, plus n_train. Memoized per source dir, so
+    * neither the scoring query nor the cartography census re-pays the T
+    * training passes. */
   def trainedTrajectory(docs: DataFrame, dir: String): (Seq[Map[Long, Long]], Long) =
-    modelMemo.getOrElseUpdate(dir, {
+    StorageMemos.get[(Seq[Map[Long, Long]], Long)]("qclassifier.trajectory", dir) {
       import graft.ops.CacheScope.ScopedPersist
       val lab = seedLabels(docs)
       // the train-subset feature relation feeds 2 joins per iteration ×
@@ -161,16 +156,13 @@ object QClassifier {
       val tf = featurize(docs).join(lab, "doc_id").scopedPersist()
       val n = math.max(lab.count(), 1L)
       (trainCore(tf, n), n)
-    })
+    }
 
   /** Final trained weights (last trajectory entry) + n_train. */
   def trainedModel(docs: DataFrame, dir: String): (Map[Long, Long], Long) = {
     val (traj, n) = trainedTrajectory(docs, dir)
     (traj.last, n)
   }
-
-  /** k-fold memo: all k leave-one-fold-out models at once. */
-  private val foldMemo = TrieMap.empty[(String, Int), Map[Int, (Map[Long, Long], Long)]]
 
   /** Fold id per doc: the keyed hash mod k (identical SQL spelling). */
   def foldOf(k: Int) = pmod(Dedup.hex60(
@@ -187,7 +179,7 @@ object QClassifier {
     * independent trainings — which is what the oracle replays as k
     * separate unrolled chains. Memoized per (dir, k). */
   def foldModelsAll(docs: DataFrame, dir: String, k: Int): Map[Int, (Map[Long, Long], Long)] =
-    foldMemo.getOrElseUpdate((dir, k), {
+    StorageMemos.get[Map[Int, (Map[Long, Long], Long)]]("qclassifier.folds", (dir, k)) {
       val spark = docs.sparkSession
       import spark.implicits._
       import graft.ops.CacheScope.ScopedPersist
@@ -226,7 +218,7 @@ object QClassifier {
       (0 until k).map { m =>
         m -> (w.collect { case ((`m`, f), wv) => f -> wv }.toMap, nOf(m))
       }.toMap
-    })
+    }
 
   /** Model trained on the seed docs OUTSIDE `fold` (of `k`). */
   def foldModel(docs: DataFrame, dir: String, k: Int, fold: Int): (Map[Long, Long], Long) =

@@ -483,27 +483,22 @@ object UlmTokenizer {
     chosen.toSeq
   }
 
-  /** Trained model memo per (dir-keyed) corpus — driver-side model
-    * metadata, the deepMerges convention: train once, every consumer
-    * (encode / fertility) reuses it; other dirs train their own. */
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(String, Long, Long)]]
+  /** Trained model per dir-keyed corpus — driver-side metadata, memoized
+    * so every consumer (encode / fertility) reuses one training. */
   def trainedModel(docs: => DataFrame, key: String): Seq[(String, Long, Long)] =
-    modelCache.getOrElseUpdate(key,
-      train(docs, "text").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq)
+    StorageMemos.get[Seq[(String, Long, Long)]]("ulm.model", key)(trainCollect(docs))
 
   /** Retrain and OVERWRITE the memo — q_ulm_train's path: the training
     * query pays full cost on every invocation (its bench/scale numbers
     * must carry the loop) and is also the memo's writer, so when it runs
     * first (Bench runs trainers ahead of the registry) no consumer ever
     * cold-trains regardless of alphabetical order. */
-  def retrain(docs: DataFrame, key: String): Seq[(String, Long, Long)] = {
-    val m = train(docs, "text").collect()
+  def retrain(docs: DataFrame, key: String): Seq[(String, Long, Long)] =
+    StorageMemos.put[Seq[(String, Long, Long)]]("ulm.model", key)(trainCollect(docs))
+
+  private def trainCollect(docs: DataFrame): Seq[(String, Long, Long)] =
+    train(docs, "text").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    modelCache.put(key, m)
-    m
-  }
 
   /** Deterministic piece ids: 'a'..'z' -> 1..26; multi-char survivors
     * get 27.. in piece order — model metadata, like BPE's step ids. */

@@ -464,10 +464,8 @@ object CorpusQueries {
     // runs first (Bench runs trainers ahead of the registry)
     "q_bpe_train_deep" -> ((s: SparkSession, d: String) => {
       import s.implicits._
-      val trained = CorpusOps.bpeTrain(scan(s, d, "documents"), "text", DeepRounds)
-        .orderBy(col("step")).collect()
-        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-      trainCache.put((d, DeepRounds), trained)
+      val trained = graft.ops.StorageMemos
+        .put[Seq[(Int, String, String, Long)]]("bpe.deep", (d, DeepRounds))(trainDeep(s, d))
       trained.toDF("step", "sym_left", "sym_right", "freq").orderBy(col("step"))
     }),
 
@@ -735,22 +733,17 @@ object CorpusQueries {
     */
   val DeepRounds = 50
 
-  /** Memoized deep-train replay per (dir, rounds): the merge table is
-    * driver-side MODEL METADATA (a few KB), and encode / fertility /
-    * roundtrip / train_deep all consume the same trained model — exactly
-    * like a real pipeline training once and shipping the tokenizer. The
-    * first q_bpe_* query in a run pays the training (the same
-    * first-query-pays convention as the dedup family's persisted
-    * pipelines); reruns against another dir (ScaleCurve's two sides)
-    * train their own.
-    */
-  private val trainCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Seq[(Int, String, String, Long)]]
+  /** Deep-train replay memoized per (dir, rounds): the merge table is
+    * driver-side model metadata (a few KB) that encode / fertility /
+    * roundtrip / train_deep all consume, like a pipeline training once
+    * and shipping the tokenizer. */
   private def deepTrain(s: SparkSession, d: String): Seq[(Int, String, String, Long)] =
-    trainCache.getOrElseUpdate((d, DeepRounds),
-      CorpusOps.bpeTrain(scan(s, d, "documents"), "text", DeepRounds)
-        .orderBy(col("step")).collect()
-        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq)
+    graft.ops.StorageMemos
+      .get[Seq[(Int, String, String, Long)]]("bpe.deep", (d, DeepRounds))(trainDeep(s, d))
+  private def trainDeep(s: SparkSession, d: String): Seq[(Int, String, String, Long)] =
+    CorpusOps.bpeTrain(scan(s, d, "documents"), "text", DeepRounds)
+      .orderBy(col("step")).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
   private def deepMerges(s: SparkSession, d: String): Seq[(String, String)] =
     deepTrain(s, d).map(t => (t._2, t._3))
 

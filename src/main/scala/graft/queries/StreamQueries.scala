@@ -1162,7 +1162,7 @@ object StreamQueries {
     "q_stream_cidr" -> ((s: SparkSession, d: String) => {
       import org.apache.hadoop.fs.Path
       // stages the FULL events scan like every other graft_src_events3
-      // sharer — stageOnce's fingerprint is the input FILES, so a
+      // sharer — stageTo's fingerprint is the input FILES, so a
       // projected slice in the shared dir would be served to the other
       // sharers (first-stager-wins; q_stream_kll/kmv broke on `value`/
       // `event_type` when this query staged only two columns — caught

@@ -87,35 +87,7 @@ object StreamOps {
     */
   val streamShufflePartitions = 4
 
-  /** Session-scoped staging memo. Every file-stream query stages its
-    * bounded source as parquet under a query-unique /tmp dir whose BYTES
-    * are a pure function of (source dir, staging shape) — so re-writing
-    * them on every invocation (Bench attempts each query twice, Verify
-    * and ScaleCurve re-invoke too) is pure waste: ~18 staged sources ×
-    * one redundant full-table write each per bench session. First
-    * invocation per JVM writes; later ones reuse the path.
-    *
-    * The memo value is a SOURCE FINGERPRINT (file list + sizes +
-    * mtimes of the staged relation's inputs), so a source regenerated
-    * WITHIN the same JVM (GenScale in a ScaleCurve session) invalidates
-    * the staging and rewrites; a fresh JVM always rewrites. Writes are
-    * serialized per path via ConcurrentHashMap.compute (atomic per key
-    * — TrieMap.getOrElseUpdate could evaluate the by-name write twice
-    * under concurrent first calls, racing two overwrite writes into the
-    * same dir). A rewrite of an already-staged path logs one WARN line. */
-  private val stagedOnce = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-  def stageOnce(path: String, fingerprint: String = "")(write: => Unit): String = {
-    stagedOnce.compute(path, (_: String, prev: String) => {
-      if (prev != fingerprint) {
-        if (prev != null)
-          log.warn(s"stageOnce: restaging $path, its source fingerprint changed in this JVM")
-        write
-      }
-      fingerprint
-    })
-    path
-  }
 
   /** Paths whose source fingerprint fell back to "" (logged once each). */
   private val unfingerprinted = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -136,25 +108,26 @@ object StreamOps {
     } catch {
       case scala.util.control.NonFatal(e) =>
         if (unfingerprinted.add(path))
-          log.warn(s"stageOnce: no source fingerprint for $path ($e); " +
+          log.warn(s"stageTo: no source fingerprint for $path ($e); " +
             "it is staged once per JVM and a changed source is not restaged")
         ""
     }
 
   /** `df.stageTo(path)` — the memoized spelling of
     * `df.write.mode("overwrite").parquet(path)` for staged stream
-    * sources (see [[stageOnce]]). */
+    * sources, whose bytes are a pure function of (source, staging
+    * shape): the first call per JVM writes, later ones reuse the path.
+    * Keyed by path; the fingerprint is the source files plus the staged
+    * SCHEMA, so a regenerated source or a different projection staged
+    * to a shared dir (r18: a 2-column events slice NULL-filled its
+    * sharers) rewrites instead. */
   implicit class StagedWrite(private val df: DataFrame) {
-    // the fingerprint carries the staged relation's SCHEMA as well as
-    // its source files: two queries sharing a dir but staging different
-    // projections of the same table would otherwise serve the first
-    // stager's columns to everyone (observed r18: a 2-column events
-    // slice in graft_src_events3 broke q_stream_kll/kmv loudly and
-    // NULL-filled explicit-schema sharers silently). Schema drift now
-    // triggers a rewrite instead.
     def stageTo(path: String): String =
-      stageOnce(path, sourceFingerprint(df, path) + "|" + df.schema.json)(
-        df.write.mode("overwrite").parquet(path))
+      graft.ops.StorageMemos.get[String]("stream.stage", path,
+          fingerprint = sourceFingerprint(df, path) + "|" + df.schema.json) {
+        df.write.mode("overwrite").parquet(path)
+        path
+      }
   }
 
   /** r18 LIGHTER BOUNDED RUNNER (r17 verdict #3 — the streaming floor).
